@@ -16,6 +16,8 @@ This module centralizes both problems:
   index).
 - :func:`track_persist` persists anonymous intra-query temporaries and
   records them for release.
+- :func:`evict` drops the memo entries under a key prefix, for inputs
+  that can be rewritten in place (the engine's commit-dir scans).
 - :func:`release_caches` unpersists everything tracked. Call it from
   session teardown, bench epilogues, or any long-running service
   between workloads; re-running a query after release transparently
@@ -129,6 +131,23 @@ def shared_plan(spark, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
                 df = build()
                 _SHARED[k] = df
     return df
+
+
+def evict(spark, prefix: tuple) -> int:
+    """Drop (and unpersist) every memo entry of this session whose key
+    starts with ``prefix``; returns how many were dropped. For memos
+    whose input can be rewritten in place — the engine's commit-scan
+    memo evicts a commit dir before a write lands files in it and when
+    vacuum deletes it — so the next use rebuilds from the new files."""
+    k0 = (_app_id(spark), *prefix)
+    n = 0
+    for k in [k for k in list(_SHARED) if k[:len(k0)] == k0]:
+        with _key_lock(k):
+            df = _SHARED.pop(k, None)
+        if df is not None:
+            df.unpersist()
+            n += 1
+    return n
 
 
 def is_cached(spark, key: tuple) -> bool:

@@ -18,6 +18,13 @@ superstep barriers). This tool makes that a measured fact:
 
 and writes ``BENCH_STORE.json`` at the repo root.
 
+The per-graph ``bfs`` loop no longer pays superstep barriers:
+``GraphEngine.bfs`` traverses a graph of at most
+``POINT_READ_MAX_EDGES`` edges in-process after one collect, so the
+committed ``BENCH_STORE.json``, which predates that path, overstates
+the per-graph BFS cost. The other per-graph kernels still run their
+distributed loops.
+
 Usage: python tools/bench_store.py
 
 Scale mode: ``python tools/bench_store.py --scale [n1,n2,...]``
